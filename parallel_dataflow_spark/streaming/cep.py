@@ -15,8 +15,15 @@ This is the streaming re-expression of the reference's
 confluence-under-scheduling property (any worklist order → same fixpoint,
 impls/src/bin/test.rs:21-70).
 
-State is held in ``applyInPandasWithState`` (keyed state store, checkpoint-
-backed) with event-time timeout to flush the tail when the stream ends.
+The per-key streaming logic (buffer, release order, overflow bound,
+partial pruning, gap-timeout timer) is ONE pure step, stateful.cep_step,
+over rows pre-staged JVM-side to (event_ts, step mask, checksum) by
+stateful.cep_prestage. Two adapters run it: match_pattern_stream
+(``applyInPandasWithState``, state tuple = STATE_SCHEMA, event-time
+timeout flushes the tail) and stateful.match_pattern_stream_tws
+(``transformWithStateInPandas``, CepPatternProcessor's named states and
+one timer). This module keeps the NFA kernel both the step and the batch
+twin run.
 """
 
 from __future__ import annotations
@@ -170,7 +177,8 @@ def match_pattern_stream(
     max_buffer_rows: int = 100_000,
     overflow_acc=None,
 ) -> DataFrame:
-    """Streaming NFA: keyed state per doc_id, buffer-until-watermark
+    """Streaming NFA, the applyInPandasWithState adapter of
+    stateful.cep_step: keyed state per doc_id, buffer-until-watermark
     release, event-time timeout flush.
 
     ``max_buffer_rows`` bounds per-key state: if a key's buffer would
@@ -187,131 +195,8 @@ def match_pattern_stream(
     trips, so the determinism degradation is observable (asserted in
     tests/test_cep.py; surfaced post-run by streaming/jobs + the JSONL
     metrics log as cep_overflow_rows)."""
+    from parallel_dataflow_spark.streaming.stateful import cep_stream
 
-    def kernel(key, pdf_iter, state):
-        doc_id = key[0]
-        if state.exists:
-            buf_ts, buf_mask, buf_ck, p_state_a, p_start_a, p_last_a = state.get
-            buf_ts = list(buf_ts)
-            buf_mask = list(buf_mask)
-            buf_ck = list(buf_ck)
-            p_state = list(p_state_a)
-            p_start = list(p_start_a)
-            p_last = list(p_last_a)
-        else:
-            buf_ts, buf_mask, buf_ck = [], [], []
-            p_state, p_start, p_last = [], [], []
-
-        timed_out = state.hasTimedOut
-        if not timed_out:
-            for pdf in pdf_iter:
-                if pdf.empty:
-                    continue
-                ts = pdf["event_ts"].astype("datetime64[us]").astype(np.int64).to_numpy()
-                mask = row_step_mask(pdf["tokens"], pattern)
-                buf_ts.extend(ts.tolist())
-                buf_mask.extend(mask.tolist())
-                buf_ck.extend(pdf["__ck"].astype(np.int64).tolist())
-        else:
-            # consume the (empty) iterator per API contract
-            for _ in pdf_iter:
-                pass
-
-        wm_us = state.getCurrentWatermarkMs() * 1000
-
-        # strict (event_ts, checksum) release order — the same tie-break the
-        # batch twin sorts by, so same-second rows with different step masks
-        # feed the NFA identically on both paths
-        order = (
-            np.lexsort(
-                (np.asarray(buf_ck, dtype=np.int64), np.asarray(buf_ts, dtype=np.int64))
-            )
-            if buf_ts
-            else np.array([], dtype=np.int64)
-        )
-        sorted_ts = np.asarray(buf_ts, dtype=np.int64)[order] if buf_ts else np.array([], dtype=np.int64)
-        sorted_mask = np.asarray(buf_mask, dtype=np.int32)[order] if buf_ts else np.array([], dtype=np.int32)
-        sorted_ck = np.asarray(buf_ck, dtype=np.int64)[order] if buf_ts else np.array([], dtype=np.int64)
-
-        if timed_out:
-            release = np.ones(len(sorted_ts), dtype=bool)
-        else:
-            release = sorted_ts <= wm_us
-            n_rem = int((~release).sum())
-            if n_rem > max_buffer_rows:
-                # bounded-state fallback: also release the oldest overflow
-                # (sorted_ts is ascending, so the retained rows are the
-                # newest max_buffer_rows)
-                n_released = int(release.sum())
-                release = np.arange(len(sorted_ts)) < (len(sorted_ts) - max_buffer_rows)
-                if overflow_acc is not None:
-                    overflow_acc.add(int(release.sum()) - n_released)
-
-        matches = advance_nfa(
-            pattern, sorted_ts[release], sorted_mask[release], p_state, p_start, p_last
-        )
-
-        # prune partials no future row can extend: rows still to come have
-        # ts > wm, and extension requires ts - p_last <= gap, so a partial
-        # with wm - p_last > gap is dead. Without this, a timed-out key
-        # with a leftover partial keeps its state and re-registers a wm+1
-        # timeout forever — unbounded state + a timer firing every
-        # watermark advance.
-        _gap_us = pattern.gap_seconds * 1_000_000
-        _live = [j for j in range(len(p_state)) if wm_us - p_last[j] <= _gap_us]
-        if len(_live) != len(p_state):
-            p_state[:] = [p_state[j] for j in _live]
-            p_start[:] = [p_start[j] for j in _live]
-            p_last[:] = [p_last[j] for j in _live]
-
-        rem_ts = sorted_ts[~release]
-        rem_mask = sorted_mask[~release]
-        rem_ck = sorted_ck[~release]
-
-        if timed_out and len(rem_ts) == 0 and not p_state:
-            state.remove()
-        else:
-            state.update(
-                (
-                    rem_ts.tolist(),
-                    rem_mask.tolist(),
-                    rem_ck.tolist(),
-                    list(p_state),
-                    list(p_start),
-                    list(p_last),
-                )
-            )
-            # flush leftovers once the watermark has passed everything buffered
-            # (timeout must not be below the current watermark)
-            horizon_us = max(
-                (int(rem_ts.max()) if len(rem_ts) else 0),
-                (max(p_last) if p_last else 0),
-            )
-            timeout_ms = max(
-                horizon_us // 1000 + pattern.gap_seconds * 1000 + 1,
-                state.getCurrentWatermarkMs() + 1,
-            )
-            state.setTimeoutTimestamp(timeout_ms)
-
-        if matches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": doc_id,
-                    "match_start_ts": [m[0] for m in matches],
-                    "match_end_ts": [m[1] for m in matches],
-                    "n_steps": [m[2] for m in matches],
-                }
-            )
-
-    return (
-        stream.withColumn("__ck", _ck_col(F.col("tokens")))
-        .withWatermark("event_ts", watermark)
-        .groupBy("doc_id")
-        .applyInPandasWithState(
-            kernel,
-            outputStructType=MATCH_SCHEMA,
-            stateStructType=STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf="EventTimeTimeout",
-        )
+    return cep_stream(
+        stream, pattern, watermark, max_buffer_rows, overflow_acc, "apws"
     )

@@ -32,7 +32,6 @@ alternative (a distinct store) is unbounded state.
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -40,9 +39,11 @@ from pyspark.sql import types as T
 from parallel_dataflow_spark.functions.text import md5_60bit
 from parallel_dataflow_spark.operators.sketches import KMV_K
 from parallel_dataflow_spark.streaming.stateful import (
-    StatefulProcessor,
+    Step,
+    StepProcessor,
     StatefulProcessorHandle,
-    tws_available,
+    keyed_stream,
+    resolve_api,
 )
 
 KMV_OUTPUT_SCHEMA = T.StructType(
@@ -79,51 +80,63 @@ def _merge_bottomk(hs: list[int], new: list[int]) -> list[int]:
     return sorted(set(hs).union(new))[:KMV_K]
 
 
-class KmvProcessor(StatefulProcessor):
-    """transformWithStateInPandas KMV processor keyed (source,
-    window_start): ValueState sketch array + one purge timer at
-    window end + ttl (state can never change the final emission after
-    the horizon — it only ever re-derives it — so expiry emits nothing)."""
+def kmv_step(
+    window_start: int, horizon_ms: int, hs, rows: list, wm_ms: int, fired: bool
+) -> Step:
+    """One (source, window) step: union + re-rank the new (h,) rows into
+    the bottom-K sketch ``hs`` and emit it when it changed. The purge
+    timer sits at window end + ttl (``horizon_ms`` past window_start,
+    never behind the watermark); when it fires the key is dropped
+    without output — after the horizon the state could only re-derive
+    the final emission."""
+    if fired:
+        return Step(None, [])
+    old = hs or []
+    merged = _merge_bottomk(old, [r[0] for r in rows])
+    out = [(merged, len(merged))] if merged != old else []
+    return Step(merged, out, max(window_start * 1000 + horizon_ms, wm_ms + 1))
+
+
+class KmvProcessor(StepProcessor):
+    """TWS adapter of kmv_step keyed (source, window_start): ValueState
+    sketch array + the step's purge timer."""
+
+    COLUMNS = ("h",)
+    SCHEMA = KMV_OUTPUT_SCHEMA
 
     def __init__(self, window_sec: int = 600, ttl_sec: int = 600):
-        self._window_ms = int(window_sec) * 1000
-        self._ttl_ms = int(ttl_sec) * 1000
+        self._horizon_ms = (int(window_sec) + int(ttl_sec)) * 1000
 
     def init(self, handle: StatefulProcessorHandle) -> None:
         self._handle = handle
-        self._hs = handle.getValueState("kmv_hs", "hs array<bigint>")
+        self._hs = handle.getValueState("kmv_hs", _STATE_SCHEMA)
 
-    def handleInputRows(self, key, rows, timerValues):
-        new: list[int] = []
-        for pdf in rows:
-            if not pdf.empty:
-                new.extend(int(x) for x in pdf["h"].tolist())
-        old = (
-            [int(x) for x in self._hs.get()[0]] if self._hs.exists() else None
-        )
-        merged = _merge_bottomk(old or [], new)
-        if old is None:
-            # first sight of this (source, window): arm the purge timer
-            self._handle.registerTimer(
-                int(key[1]) * 1000 + self._window_ms + self._ttl_ms
-            )
-        if merged != (old or []):
-            self._hs.update((merged,))
-            yield pd.DataFrame(
-                {
-                    "source": [str(key[0])],
-                    "window_start": [int(key[1])],
-                    "hs": [merged],
-                    "sketch_size": [len(merged)],
-                }
-            )
+    def step(self, key, state, rows, wm_ms, fired):
+        return kmv_step(int(key[1]), self._horizon_ms, state, rows, wm_ms, fired)
 
-    def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-        self._hs.clear()
-        yield from ()
+    def load(self):
+        self._seen = self._hs.exists()
+        return _decode(self._hs.get()) if self._seen else None
 
-    def close(self) -> None:
-        pass
+    def store(self, st: Step) -> None:
+        if st.state is None:
+            self._hs.clear()
+            return
+        if not self._seen:
+            # first sight: arm the purge timer once — the step's instant
+            # is fixed per key (window end + ttl; rows behind the
+            # watermark never reach the operator)
+            self._handle.registerTimer(st.timer_ms)
+        if st.out:
+            self._hs.update(_encode(st.state))
+
+
+def _decode(t) -> list[int]:
+    return [int(x) for x in t[0]]
+
+
+def _encode(hs: list[int]) -> tuple:
+    return (hs,)
 
 
 def kmv_stream(
@@ -135,55 +148,18 @@ def kmv_stream(
 ) -> DataFrame:
     """Streaming per-(source, window) bottom-K sketch with the repo's API
     fallback: 'tws' = transformWithStateInPandas (KmvProcessor), 'apws' =
-    applyInPandasWithState with the same merge (EventTimeTimeout replaces
-    the timer)."""
-    if api == "auto":
-        api = "tws" if tws_available() else "apws"
+    applyInPandasWithState over the same kmv_step (EventTimeTimeout
+    replaces the timer)."""
+    api = resolve_api(api)
     src = kmv_prestage(stream, window_sec).withWatermark("event_ts", watermark)
-    if api == "tws":
-        return src.groupBy("source", "window_start").transformWithStateInPandas(
-            statefulProcessor=KmvProcessor(window_sec, ttl_sec),
-            outputStructType=KMV_OUTPUT_SCHEMA,
-            outputMode="append",
-            timeMode="eventTime",
-        )
-
-    horizon_ms = (int(window_sec) + int(ttl_sec)) * 1000
-
-    def kernel(key, pdf_iter, state):
-        if state.hasTimedOut:
-            state.remove()
-            return
-        old = None
-        if state.exists:
-            (hs,) = state.get
-            old = [int(x) for x in hs]
-        new: list[int] = []
-        for pdf in pdf_iter:
-            if not pdf.empty:
-                new.extend(int(x) for x in pdf["h"].tolist())
-        merged = _merge_bottomk(old or [], new)
-        state.update((merged,))
-        wm_ms = max(state.getCurrentWatermarkMs(), 0)
-        state.setTimeoutTimestamp(
-            max(int(key[1]) * 1000 + horizon_ms, wm_ms + 1)
-        )
-        if merged != (old or []):
-            yield pd.DataFrame(
-                {
-                    "source": [str(key[0])],
-                    "window_start": [int(key[1])],
-                    "hs": [merged],
-                    "sketch_size": [len(merged)],
-                }
-            )
-
-    return src.groupBy("source", "window_start").applyInPandasWithState(
-        kernel,
-        outputStructType=KMV_OUTPUT_SCHEMA,
-        stateStructType=_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf="EventTimeTimeout",
+    return keyed_stream(
+        src,
+        ["source", "window_start"],
+        KmvProcessor(window_sec, ttl_sec),
+        api,
+        _STATE_SCHEMA,
+        _decode,
+        _encode,
     )
 
 

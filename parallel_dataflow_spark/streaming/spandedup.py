@@ -33,16 +33,20 @@ and an explicit ttl — none of which the built-in exposes.
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from parallel_dataflow_spark.functions.text import md5_60bit
 from parallel_dataflow_spark.streaming.stateful import (
-    StatefulProcessor,
+    Step,
+    StepProcessor,
     StatefulProcessorHandle,
-    tws_available,
+    columns_of,
+    keyed_stream,
+    put_rows,
+    resolve_api,
+    sync_timer,
 )
 
 SPANDEDUP_OUTPUT_SCHEMA = T.StructType(
@@ -89,30 +93,49 @@ def span_prestage(df: DataFrame, span_tokens: int = 16) -> DataFrame:
     )
 
 
-def _fold(buf, owner, wm_us):
-    """Shared release fold: sort (ts, ck, doc, idx), release rows at or
-    behind the watermark into the owner record, keep the rest buffered.
-    owner = [own_doc, own_idx, dup_rows, last_ts] or None. Returns
-    (owner, remain, changed)."""
-    buf.sort(key=lambda r: (r[0], r[1], r[2], r[3]))
+def span_step(ttl_us: int, state, rows: list, wm_ms: int) -> Step:
+    """One span hash's step. ``state`` = (buffer rows (ts_us, ck, doc,
+    idx), owner (own_doc, own_idx, dup_rows, last_ts) or None); ``rows``
+    = new (ts_us, ck, doc, idx).
+
+    Sorts the buffer in (ts, ck, doc, idx) order and releases the rows at
+    or behind the watermark: the first released row ever owns the span,
+    every later one adds to dup_rows, and last_ts tracks the newest
+    release. Emits the RUNNING (owner_doc, owner_idx, dup_rows) whenever
+    rows were released — from the PRE-purge value, since a large
+    watermark jump can release and close the horizon in one step (the
+    quota kernel lesson). Once nothing is buffered and last_ts + ttl is
+    behind the watermark the record can never change: all state is
+    dropped. Otherwise the timer sits at the earliest actionable instant
+    (min buffered ts, else the purge horizon), never behind the
+    watermark."""
+    buf, owner = state or ([], None)
+    wm_us = wm_ms * 1000
+    buf = sorted([*buf, *rows])
     release = [r for r in buf if r[0] <= wm_us]
     remain = [r for r in buf if r[0] > wm_us]
-    if not release:
-        return owner, remain, False
-    if owner is None:
-        first = release[0]
-        owner = [first[2], first[3], len(release) - 1, release[-1][0]]
-    else:
-        owner[2] += len(release)
-        owner[3] = max(owner[3], release[-1][0])
-    return owner, remain, True
+    if release:
+        if owner is None:
+            owner = (release[0][2], release[0][3], len(release) - 1, release[-1][0])
+        else:
+            doc, idx, dups, last = owner
+            owner = (doc, idx, dups + len(release), max(last, release[-1][0]))
+    out = [owner[:3]] if release else []
+    if not remain and (owner is None or owner[3] + ttl_us <= wm_us):
+        return Step(None, out)
+    horizons = [min(r[0] for r in remain) // 1000 + 1] if remain else []
+    if owner is not None:
+        horizons.append((owner[3] + ttl_us) // 1000 + 1)
+    return Step((remain, owner), out, max(min(horizons), wm_ms + 1))
 
 
-class SpanDedupProcessor(StatefulProcessor):
-    """transformWithStateInPandas span-dedup processor, keyed by span
-    hash: ListState buffer (the sub-watermark holding pen), ValueState
-    owner record, ONE delete-then-register event-time timer at the
-    earliest actionable instant (min buffered ts, else purge horizon)."""
+class SpanDedupProcessor(StepProcessor):
+    """TWS adapter of span_step, keyed by span hash: ListState
+    'span_buffer' (the sub-watermark holding pen), ValueState
+    'span_owner', and one event-time timer recorded in 'span_timer'."""
+
+    COLUMNS = ("event_ts", "ck", "doc_id", "span_idx")
+    SCHEMA = SPANDEDUP_OUTPUT_SCHEMA
 
     def __init__(self, ttl_sec: int = 3600):
         self._ttl_us = int(ttl_sec) * 1_000_000
@@ -128,88 +151,39 @@ class SpanDedupProcessor(StatefulProcessor):
         )
         self._timer = handle.getValueState("span_timer", "t bigint")
 
-    def _advance(self, key, wm_us: int, new_rows: list):
-        buf = [
-            (int(r[0]), int(r[1]), str(r[2]), int(r[3]))
-            for r in (self._buf.get() if self._buf.exists() else [])
-        ]
-        buf.extend(new_rows)
-        owner = None
-        if self._own.exists():
-            o = self._own.get()
-            owner = [str(o[0]), int(o[1]), int(o[2]), int(o[3])]
-        owner, remain, changed = _fold(buf, owner, wm_us)
+    def step(self, key, state, rows, wm_ms, fired):
+        return span_step(self._ttl_us, state, rows, wm_ms)
 
-        if owner is not None and not remain and owner[3] + self._ttl_us <= wm_us:
-            # horizon closed: the record can never change — purge all
-            # state, but emit from the PRE-purge value when this same
-            # advance released rows (a large watermark jump can release
-            # and close in one step — the quota kernel lesson)
-            self._buf.clear()
+    def load(self):
+        buf = _buffer_rows(self._buf.get()) if self._buf.exists() else []
+        return buf, (_owner(*self._own.get()) if self._own.exists() else None)
+
+    def store(self, st: Step) -> None:
+        buf, owner = st.state or ([], None)
+        put_rows(self._buf, buf)
+        if owner is None:
             self._own.clear()
-            old = int(self._timer.get()[0]) if self._timer.exists() else None
-            if old is not None:
-                self._handle.deleteTimer(old)
-            self._timer.clear()
-            return owner if changed else None
-        self._buf.clear()
-        if remain:
-            self._buf.put([tuple(r) for r in remain])
-        if owner is not None:
-            self._own.update(tuple(owner))
-        horizons = []
-        if remain:
-            horizons.append(min(r[0] for r in remain) // 1000 + 1)
-        if owner is not None:
-            horizons.append((owner[3] + self._ttl_us) // 1000 + 1)
-        old = int(self._timer.get()[0]) if self._timer.exists() else None
-        if horizons:
-            t_ms = max(min(horizons), wm_us // 1000 + 1)
-            if old != t_ms:
-                if old is not None:
-                    self._handle.deleteTimer(old)
-                self._handle.registerTimer(t_ms)
-                self._timer.update((t_ms,))
-        elif old is not None:
-            self._handle.deleteTimer(old)
-            self._timer.clear()
-        return owner if changed else None
+        else:
+            self._own.update(owner)
+        sync_timer(self._handle, self._timer, st.timer_ms)
 
-    @staticmethod
-    def _emit(key, owner):
-        if owner is not None:
-            yield pd.DataFrame(
-                {
-                    "h": [int(key[0])],
-                    "owner_doc": [owner[0]],
-                    "owner_idx": [owner[1]],
-                    "dup_rows": [owner[2]],
-                }
-            )
 
-    def handleInputRows(self, key, rows, timerValues):
-        new = []
-        for pdf in rows:
-            if pdf.empty:
-                continue
-            ts = pdf["event_ts"].astype("datetime64[us]").astype("int64")
-            new.extend(
-                zip(
-                    ts.tolist(),
-                    pdf["ck"].astype("int64").tolist(),
-                    pdf["doc_id"].astype(str).tolist(),
-                    pdf["span_idx"].astype("int64").tolist(),
-                )
-            )
-        wm_us = max(timerValues.getCurrentWatermarkInMs(), 0) * 1000
-        yield from self._emit(key, self._advance(key, wm_us, new))
+def _buffer_rows(rows) -> list[tuple]:
+    return [(int(a), int(b), str(c), int(d)) for a, b, c, d in rows]
 
-    def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-        wm_us = max(timerValues.getCurrentWatermarkInMs(), 0) * 1000
-        yield from self._emit(key, self._advance(key, wm_us, []))
 
-    def close(self) -> None:
-        pass
+def _owner(doc, idx, dups, last) -> tuple | None:
+    return None if doc is None else (str(doc), int(idx), int(dups), int(last))
+
+
+def _decode(t) -> tuple:
+    b_ts, b_ck, b_doc, b_idx, *owner = t
+    return _buffer_rows(zip(b_ts, b_ck, b_doc, b_idx)), _owner(*owner)
+
+
+def _encode(state) -> tuple:
+    buf, owner = state
+    return (*columns_of(buf, 4), *(owner or (None,) * 4))
 
 
 def span_dedup_stream(
@@ -221,91 +195,14 @@ def span_dedup_stream(
 ) -> DataFrame:
     """Streaming keep-first span dedup with the repo's API fallback:
     'tws' = transformWithStateInPandas (SpanDedupProcessor), 'apws' =
-    applyInPandasWithState with the SAME buffered-release fold (state
-    tuple = parallel arrays; EventTimeTimeout replaces the timer)."""
-    if api == "auto":
-        api = "tws" if tws_available() else "apws"
+    applyInPandasWithState over the SAME span_step (state tuple =
+    parallel arrays; EventTimeTimeout replaces the timer)."""
+    api = resolve_api(api)
     src = span_prestage(stream, span_tokens).withWatermark(
         "event_ts", watermark
     )
-    if api == "tws":
-        return src.groupBy("h").transformWithStateInPandas(
-            statefulProcessor=SpanDedupProcessor(ttl_sec),
-            outputStructType=SPANDEDUP_OUTPUT_SCHEMA,
-            outputMode="append",
-            timeMode="eventTime",
-        )
-
-    ttl_us = int(ttl_sec) * 1_000_000
-
-    def kernel(key, pdf_iter, state):
-        buf: list[tuple[int, int, str, int]] = []
-        owner = None
-        if state.exists:
-            b_ts, b_ck, b_doc, b_idx, od, oi, dr, lt = state.get
-            buf = [
-                (int(a), int(b), str(c), int(d))
-                for a, b, c, d in zip(b_ts, b_ck, b_doc, b_idx)
-            ]
-            if od is not None:
-                owner = [str(od), int(oi), int(dr), int(lt)]
-        for pdf in pdf_iter:
-            if pdf.empty:
-                continue
-            ts = pdf["event_ts"].astype("datetime64[us]").astype("int64")
-            buf.extend(
-                zip(
-                    ts.tolist(),
-                    pdf["ck"].astype("int64").tolist(),
-                    pdf["doc_id"].astype(str).tolist(),
-                    pdf["span_idx"].astype("int64").tolist(),
-                )
-            )
-        wm_us = max(state.getCurrentWatermarkMs(), 0) * 1000
-        owner, remain, changed = _fold(buf, owner, wm_us)
-
-        if not remain and (
-            owner is None or owner[3] + ttl_us <= wm_us
-        ):
-            state.remove()
-        else:
-            state.update(
-                (
-                    [r[0] for r in remain],
-                    [r[1] for r in remain],
-                    [r[2] for r in remain],
-                    [r[3] for r in remain],
-                    owner[0] if owner else None,
-                    owner[1] if owner else None,
-                    owner[2] if owner else None,
-                    owner[3] if owner else None,
-                )
-            )
-            horizons = []
-            if remain:
-                horizons.append(min(r[0] for r in remain) // 1000 + 1)
-            if owner is not None:
-                horizons.append((owner[3] + ttl_us) // 1000 + 1)
-            if horizons:
-                state.setTimeoutTimestamp(
-                    max(min(horizons), wm_us // 1000 + 1)
-                )
-        if changed and owner is not None:
-            yield pd.DataFrame(
-                {
-                    "h": [int(key[0])],
-                    "owner_doc": [owner[0]],
-                    "owner_idx": [owner[1]],
-                    "dup_rows": [owner[2]],
-                }
-            )
-
-    return src.groupBy("h").applyInPandasWithState(
-        kernel,
-        outputStructType=SPANDEDUP_OUTPUT_SCHEMA,
-        stateStructType=_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf="EventTimeTimeout",
+    return keyed_stream(
+        src, ["h"], SpanDedupProcessor(ttl_sec), api, _STATE_SCHEMA, _decode, _encode
     )
 
 

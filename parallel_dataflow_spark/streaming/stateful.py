@@ -1,61 +1,284 @@
-"""Custom keyed stateful operators on Spark 4.x transformWithStateInPandas
-(the successor API to applyInPandasWithState; SURVEY.md §2.2 'stateful
-ops'). The CEP engine (cep.py) uses applyInPandasWithState — this module
-covers the modern API surface with three processors, one per state
-primitive: RunningDocStats (ValueState — the 'mutable in/out values
-across rounds' shape of the reference's worklist state,
-impls/src/sequential.rs:23-24), CepPatternProcessor (ListState + event
--time timers), and TokenQuotaProcessor (MapState + timer-driven purge).
+"""Keyed stateful stream operators: one pure step per operator, two API
+adapters around it (SURVEY.md §2.2 'stateful ops').
 
-The per-row token work (sum/checksum) is done JVM-side BEFORE the
-stateful stage, so the state kernel only folds small numeric rows —
-token arrays never enter the state store.
+Each operator's per-key logic — buffer, release order, fold, purge and
+the next event-time timer — is ONE pure function of (key state, new rows,
+watermark, whether a timer fired) that returns a ``Step``:
+doc_stats_step and quota_step here, cep_step here beside the NFA kernel
+it drives (cep.advance_nfa), kmvstream.kmv_step and spandedup.span_step.
+Two thin adapters run it, the split Carbone et al. (VLDB 2017) draw
+between operator logic and state backend:
+
+- transformWithStateInPandas (TWS): the processor class loads the state
+  from its named Value/List/Map state handles, calls the step, writes the
+  state back and keeps ONE live event-time timer per key (sync_timer);
+- applyInPandasWithState (APWS): keyed_stream's kernel decodes the
+  group's state tuple, calls the same step, encodes the result and sets
+  the event-time timeout, or removes the state.
+
+``api`` picks the adapter (resolve_api). The four state primitives are
+covered: RunningDocStats (ValueState — the 'mutable in/out values across
+rounds' shape of the reference's worklist state,
+impls/src/sequential.rs:23-24), CepPatternProcessor (ListState + event-
+time timers), TokenQuotaProcessor (MapState + timer-driven purge).
+
+The per-row token work (sum/checksum, step masks, hashes) is done
+JVM-side BEFORE the stateful stage (the *_prestage functions), so the
+state kernel only folds small numeric rows — token arrays never enter
+the state store.
 """
 
 from __future__ import annotations
 
+from abc import abstractmethod
+from typing import Any, NamedTuple
+
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.sql.streaming.stateful_processor import (
     StatefulProcessor,
     StatefulProcessorHandle,
 )
 
-OUTPUT_SCHEMA = (
-    "doc_id string, n_seqs bigint, total_tokens bigint, token_checksum bigint"
+from parallel_dataflow_spark.streaming.cep import (
+    MATCH_SCHEMA,
+    STATE_SCHEMA,
+    _ck_col,
+    advance_nfa,
+)
+
+OUTPUT_SCHEMA = T.StructType(
+    [
+        T.StructField("doc_id", T.StringType()),
+        T.StructField("n_seqs", T.LongType()),
+        T.StructField("total_tokens", T.LongType()),
+        T.StructField("token_checksum", T.LongType()),
+    ]
 )
 _STATE_SCHEMA = "n_seqs bigint, total_tokens bigint, token_checksum bigint"
 _CHECKSUM_MOD = 1 << 40
 
 
+# ---------------------------------------------------------------------------
+# Shared adapter plumbing
+# ---------------------------------------------------------------------------
+
+
+class Step(NamedTuple):
+    """One step's result: the key's new state (None: drop all of it), the
+    output rows without the key columns, the next event-time timer in
+    epoch ms (None: no timer) and the rows released early by a buffer
+    bound (CEP only)."""
+
+    state: Any
+    out: list
+    timer_ms: int | None = None
+    overflow: int = 0
+
+
+def tws_available() -> bool:
+    """transformWithStateInPandas needs google.protobuf for its state
+    protocol (pyspark/sql/streaming/proto/StateMessage_pb2.py); where it
+    is missing, api='auto' falls back to applyInPandasWithState (same
+    semantics, prior-generation API)."""
+    try:
+        from google.protobuf import descriptor  # noqa: F401
+
+        return True
+    except ImportError:
+        return False
+
+
+def resolve_api(api: str) -> str:
+    """'tws' (transformWithStateInPandas) or 'apws'
+    (applyInPandasWithState) pass through; 'auto' is tws when its
+    protobuf dependency is importable; anything else is an error."""
+    if api == "auto":
+        return "tws" if tws_available() else "apws"
+    if api not in ("tws", "apws"):
+        raise ValueError(f"api must be 'auto', 'tws' or 'apws', got {api!r}")
+    return api
+
+
+def _plain(col: pd.Series) -> list:
+    if pd.api.types.is_datetime64_any_dtype(col.dtype):
+        return col.astype("datetime64[us]").astype("int64").tolist()
+    if pd.api.types.is_string_dtype(col.dtype):
+        return col.astype(str).tolist()
+    return col.astype("int64").tolist()
+
+
+def rows_of(pdfs, columns) -> list[tuple]:
+    """A key's new rows as plain-Python tuples in ``columns`` order,
+    converted by dtype: timestamps to epoch micros, strings to str, every
+    other column to int. Consumes the frame iterator (the APWS contract,
+    timed-out calls included)."""
+    rows: list[tuple] = []
+    for pdf in pdfs:
+        if not pdf.empty:
+            rows.extend(zip(*(_plain(pdf[c]) for c in columns)))
+    return rows
+
+
+def emit(key, out: list, schema: T.StructType):
+    """Yield the step's output rows, prefixed by the grouping key, as one
+    frame with the output schema's column names (nothing if no rows)."""
+    if out:
+        yield pd.DataFrame([(*key, *row) for row in out], columns=schema.fieldNames())
+
+
+def put_rows(list_state, rows: list) -> None:
+    """Replace a ListState's rows (an empty list leaves it absent)."""
+    list_state.clear()
+    if rows:
+        list_state.put([tuple(r) for r in rows])
+
+
+def sync_timer(handle: StatefulProcessorHandle, recorded, t_ms) -> None:
+    """Keep ONE live event-time timer per key, its instant recorded in the
+    ValueState ``recorded``: delete-then-register when the step's next
+    instant changes, delete when the step has none."""
+    old = int(recorded.get()[0]) if recorded.exists() else None
+    if old == t_ms:
+        return
+    if old is not None:
+        handle.deleteTimer(old)
+    if t_ms is None:
+        recorded.clear()
+    else:
+        handle.registerTimer(t_ms)
+        recorded.update((t_ms,))
+
+
+class StepProcessor(StatefulProcessor):
+    """TWS adapter around an event-time step. A subclass names its input
+    columns (COLUMNS, in step-row order) and output schema (SCHEMA, key
+    columns first), binds ``step`` to its pure step function, and maps
+    the step's state onto its named state handles (init / load / store).
+    keyed_stream runs the SAME ``step`` inside its APWS kernel."""
+
+    COLUMNS: tuple[str, ...]
+    SCHEMA: Any
+
+    @abstractmethod
+    def step(self, key, state, rows: list, wm_ms: int, fired: bool) -> Step: ...
+
+    @abstractmethod
+    def load(self): ...
+
+    @abstractmethod
+    def store(self, st: Step) -> None: ...
+
+    def _run(self, key, rows, timerValues, fired):
+        wm_ms = max(timerValues.getCurrentWatermarkInMs(), 0)
+        st = self.step(key, self.load(), rows, wm_ms, fired)
+        self.store(st)
+        yield from emit(key, st.out, self.SCHEMA)
+
+    def handleInputRows(self, key, rows, timerValues):
+        yield from self._run(key, rows_of(rows, self.COLUMNS), timerValues, False)
+
+    def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
+        yield from self._run(key, [], timerValues, True)
+
+    def close(self) -> None:
+        pass
+
+
+def keyed_stream(
+    src: DataFrame,
+    keys: list[str],
+    proc: StepProcessor,
+    api: str,
+    state_schema,
+    decode,
+    encode,
+) -> DataFrame:
+    """Run ``proc``'s step per key of ``src`` (watermarked, pre-staged to
+    proc.COLUMNS): as the TWS processor itself (api 'tws'), or inside an
+    APWS kernel (api 'apws') that keeps the step's state as one
+    ``state_schema`` tuple (``decode``: tuple -> step state, ``encode``:
+    step state -> tuple) and its timer as the group's event-time
+    timeout."""
+    grouped = src.groupBy(*keys)
+    if api == "tws":
+        return grouped.transformWithStateInPandas(
+            statefulProcessor=proc,
+            outputStructType=proc.SCHEMA,
+            outputMode="append",
+            timeMode="eventTime",
+        )
+
+    def kernel(key, pdf_iter, state):
+        st = proc.step(
+            key,
+            decode(state.get) if state.exists else None,
+            rows_of(pdf_iter, proc.COLUMNS),
+            max(state.getCurrentWatermarkMs(), 0),
+            state.hasTimedOut,
+        )
+        if st.state is None:
+            state.remove()
+        else:
+            state.update(encode(st.state))
+            state.setTimeoutTimestamp(st.timer_ms)
+        yield from emit(key, st.out, proc.SCHEMA)
+
+    return grouped.applyInPandasWithState(
+        kernel,
+        outputStructType=proc.SCHEMA,
+        stateStructType=state_schema,
+        outputMode="append",
+        timeoutConf="EventTimeTimeout",
+    )
+
+
+def int_rows(rows) -> list[tuple]:
+    """State rows (or zipped parallel state arrays) -> tuples of ints."""
+    return [tuple(int(x) for x in r) for r in rows]
+
+
+def columns_of(rows: list, width: int) -> list[list]:
+    """Row tuples -> ``width`` parallel state arrays."""
+    return [[r[i] for r in rows] for i in range(width)]
+
+
+# ---------------------------------------------------------------------------
+# RunningDocStats: ValueState accumulator, no timer
+# ---------------------------------------------------------------------------
+
+_DOC_COLUMNS = ("n_tok", "token_sum")
+
+
+def doc_stats_step(state, rows: list) -> Step:
+    """Per doc_id, fold the new (n_tok, token_sum) rows into (count,
+    Σ n_tok, Σ token_sum mod 2^40) and emit the RUNNING totals. The state
+    lives as long as the key; there is no timer."""
+    n, tok, ck = state or (0, 0, 0)
+    n += len(rows)
+    tok += sum(r[0] for r in rows)
+    ck = (ck + sum(r[1] for r in rows)) % _CHECKSUM_MOD
+    return Step((n, tok, ck), [(n, tok, ck)])
+
+
 class RunningDocStats(StatefulProcessor):
-    """ValueState accumulator: per doc_id, fold (count, Σ n_tok,
-    Σ token_sum mod 2^40) across micro-batches; emits the RUNNING totals
-    once per batch in which the key received rows."""
+    """TWS adapter of doc_stats_step: the running totals live in the
+    ValueState 'doc_stats'; emits once per batch in which the key
+    received rows."""
 
     def init(self, handle: StatefulProcessorHandle) -> None:
         self._state = handle.getValueState("doc_stats", _STATE_SCHEMA)
 
     def handleInputRows(self, key, rows, timerValues):
-        n, tok, ck = 0, 0, 0
-        if self._state.exists():
-            n, tok, ck = self._state.get()
-        for pdf in rows:
-            if pdf.empty:
-                continue
-            n += len(pdf)
-            tok += int(pdf["n_tok"].astype("int64").sum())
-            ck = (ck + int(pdf["token_sum"].astype("int64").sum())) % _CHECKSUM_MOD
-        self._state.update((n, tok, ck))
-        yield pd.DataFrame(
-            {
-                "doc_id": [key[0]],
-                "n_seqs": [n],
-                "total_tokens": [tok],
-                "token_checksum": [ck],
-            }
+        st = doc_stats_step(
+            self._state.get() if self._state.exists() else None,
+            rows_of(rows, _DOC_COLUMNS),
         )
+        self._state.update(st.state)
+        yield from emit(key, st.out, OUTPUT_SCHEMA)
 
     def close(self) -> None:
         pass
@@ -70,26 +293,12 @@ def _with_token_sum(df: DataFrame) -> DataFrame:
     )
 
 
-def tws_available() -> bool:
-    """transformWithStateInPandas needs google.protobuf for its state
-    protocol (pyspark/sql/streaming/proto/StateMessage_pb2.py); this
-    sandbox image lacks it, so the engine auto-falls-back to
-    applyInPandasWithState (same semantics, prior-generation API)."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
 def running_doc_stats_stream(stream: DataFrame, api: str = "auto") -> DataFrame:
     """Streaming: emits the running totals per key per batch (take the
     final emission per key for end-of-stream totals). ``api``: 'tws'
     (transformWithStateInPandas), 'apws' (applyInPandasWithState), or
     'auto' (tws when its protobuf dependency is importable)."""
-    if api == "auto":
-        api = "tws" if tws_available() else "apws"
+    api = resolve_api(api)
     src = _with_token_sum(stream)
     if api == "tws":
         return src.groupBy("doc_id").transformWithStateInPandas(
@@ -99,25 +308,12 @@ def running_doc_stats_stream(stream: DataFrame, api: str = "auto") -> DataFrame:
             timeMode="None",
         )
 
-    import pandas as pd  # noqa: F811 (worker-side import)
-
     def kernel(key, pdf_iter, state):
-        n, tok, ck = state.get if state.exists else (0, 0, 0)
-        for pdf in pdf_iter:
-            if pdf.empty:
-                continue
-            n += len(pdf)
-            tok += int(pdf["n_tok"].astype("int64").sum())
-            ck = (ck + int(pdf["token_sum"].astype("int64").sum())) % _CHECKSUM_MOD
-        state.update((int(n), int(tok), int(ck)))
-        yield pd.DataFrame(
-            {
-                "doc_id": [key[0]],
-                "n_seqs": [n],
-                "total_tokens": [tok],
-                "token_checksum": [ck],
-            }
+        st = doc_stats_step(
+            state.get if state.exists else None, rows_of(pdf_iter, _DOC_COLUMNS)
         )
+        state.update(st.state)
+        yield from emit(key, st.out, OUTPUT_SCHEMA)
 
     return src.groupBy("doc_id").applyInPandasWithState(
         kernel,
@@ -128,28 +324,75 @@ def running_doc_stats_stream(stream: DataFrame, api: str = "auto") -> DataFrame:
     )
 
 
+# ---------------------------------------------------------------------------
+# CEP: ListState buffer + partials, gap-timeout timer
+# ---------------------------------------------------------------------------
+
 _CEP_BUF_SCHEMA = "ts bigint, mask int, ck bigint"
 _CEP_PARTIAL_SCHEMA = "p_state int, p_start bigint, p_last bigint"
 
 
-class CepPatternProcessor(StatefulProcessor):
-    """TWS variant of the CEP buffer (streaming/cep.py): ListState for the
-    watermark-ordered row buffer, ListState for NFA partial matches, a
-    ValueState-tracked event-time timer for the gap-timeout flush. The NFA
-    itself is the SAME pure kernel (cep.advance_nfa) the apws path and the
-    batch twin run, so all three stay semantics-identical by construction.
+def cep_step(
+    pattern, max_buffer_rows: int, state, rows: list, wm_ms: int, fired: bool
+) -> Step:
+    """One doc_id's CEP step (module docstring of cep.py for the
+    semantics). ``state`` = (buffer rows (ts_us, mask, ck), partial
+    matches (p_state, p_start, p_last)); ``rows`` = new (ts_us, mask, ck).
 
-    Rows arrive pre-staged as (event_ts, mask, ck) — the step-membership
-    bitmask and release-order checksum are computed JVM-side before the
-    stateful stage (cep_prestage), so token arrays never enter the state
-    store (same at-scale rule as RunningDocStats).
+    Appends the rows, then releases every buffered row at-or-behind the
+    watermark (every row, when the timer fired: its instant is past the
+    buffered horizon + gap) through advance_nfa in strict (event_ts, ck)
+    order — the batch twin's sort. If more than ``max_buffer_rows`` would
+    stay buffered, the OLDEST overflow rows are released early; their
+    count is Step.overflow. Partials no future row can extend (future
+    rows have ts > wm, extension needs ts - p_last <= gap) are dropped —
+    otherwise a dead key re-arms a wm+1 timer forever. The rest is kept,
+    with the timer at max(horizon + gap, watermark) + 1 ms; an empty key
+    keeps nothing."""
+    buf, partials = state or ([], [])
+    wm_us = wm_ms * 1000
+    arr = np.array([*buf, *rows], dtype=np.int64).reshape(-1, 3)
+    arr = arr[np.lexsort((arr[:, 2], arr[:, 0]))]
+    ts = arr[:, 0]
 
-    Per batch: append new rows, release everything at-or-behind the
-    watermark through the NFA in strict (event_ts, ck) order, retain the
-    rest (bounded by max_buffer_rows with the same oldest-first overflow
-    release + accumulator as the apws kernel), and (re-)register one timer
-    at max(buffered horizon + gap, watermark)+1ms; the expired-timer hook
-    flushes the remaining buffer and expired partials."""
+    overflow = 0
+    if fired:
+        release = np.ones(len(ts), dtype=bool)
+    else:
+        release = ts <= wm_us
+        if int((~release).sum()) > max_buffer_rows:
+            n_released = int(release.sum())
+            release = np.arange(len(ts)) < (len(ts) - max_buffer_rows)
+            overflow = int(release.sum()) - n_released
+
+    p_state = [p[0] for p in partials]
+    p_start = [p[1] for p in partials]
+    p_last = [p[2] for p in partials]
+    matches = advance_nfa(
+        pattern, ts[release], arr[release, 1], p_state, p_start, p_last
+    )
+    gap_us = pattern.gap_seconds * 1_000_000
+    partials = [
+        p for p in zip(p_state, p_start, p_last) if wm_us - p[2] <= gap_us
+    ]
+    buf = [tuple(r) for r in arr[~release].tolist()]
+    if not buf and not partials:
+        return Step(None, matches, None, overflow)
+    horizon_us = max([0] + [r[0] for r in buf] + [p[2] for p in partials])
+    timer_ms = max(horizon_us // 1000 + pattern.gap_seconds * 1000 + 1, wm_ms + 1)
+    return Step((buf, partials), matches, timer_ms, overflow)
+
+
+class CepPatternProcessor(StepProcessor):
+    """TWS adapter of cep_step: ListState 'cep_buffer' for the
+    watermark-ordered row buffer, ListState 'cep_partials' for the NFA
+    partial matches, one event-time timer (recorded in 'cep_timer') for
+    the gap-timeout flush. ``overflow_acc`` (a Spark accumulator) counts
+    the rows the ``max_buffer_rows`` bound releases early; the APWS path
+    (cep.match_pattern_stream) runs this same processor's step."""
+
+    COLUMNS = ("event_ts", "mask", "ck")
+    SCHEMA = MATCH_SCHEMA
 
     def __init__(self, pattern, max_buffer_rows: int = 100_000, overflow_acc=None):
         self._pattern = pattern
@@ -162,142 +405,43 @@ class CepPatternProcessor(StatefulProcessor):
         self._partials = handle.getListState("cep_partials", _CEP_PARTIAL_SCHEMA)
         self._timer = handle.getValueState("cep_timer", "t bigint")
 
-    def _advance(self, wm_us: int, new_rows: list, force_all: bool):
-        import numpy as np
+    def step(self, key, state, rows, wm_ms, fired):
+        st = cep_step(self._pattern, self._max_buffer_rows, state, rows, wm_ms, fired)
+        if st.overflow and self._overflow_acc is not None:
+            self._overflow_acc.add(st.overflow)
+        return st
 
-        from parallel_dataflow_spark.streaming.cep import advance_nfa
-
-        buf = [tuple(r) for r in (self._buf.get() if self._buf.exists() else [])]
-        buf.extend(new_rows)
-        p_state: list[int] = []
-        p_start: list[int] = []
-        p_last: list[int] = []
-        if self._partials.exists():
-            for s, st, lt in self._partials.get():
-                p_state.append(int(s))
-                p_start.append(int(st))
-                p_last.append(int(lt))
-
-        ts = np.array([r[0] for r in buf], dtype=np.int64)
-        mask = np.array([r[1] for r in buf], dtype=np.int32)
-        ck = np.array([r[2] for r in buf], dtype=np.int64)
-        if len(buf):
-            # strict (event_ts, checksum) release order — identical to the
-            # apws kernel and the batch twin's sort
-            order = np.lexsort((ck, ts))
-            ts, mask, ck = ts[order], mask[order], ck[order]
-
-        if force_all:
-            release = np.ones(len(ts), dtype=bool)
-        else:
-            release = ts <= wm_us
-            n_rem = int((~release).sum())
-            if n_rem > self._max_buffer_rows:
-                n_released = int(release.sum())
-                release = np.arange(len(ts)) < (len(ts) - self._max_buffer_rows)
-                if self._overflow_acc is not None:
-                    self._overflow_acc.add(int(release.sum()) - n_released)
-
-        matches = advance_nfa(
-            self._pattern, ts[release], mask[release], p_state, p_start, p_last
+    def load(self):
+        return (
+            int_rows(self._buf.get()) if self._buf.exists() else [],
+            int_rows(self._partials.get()) if self._partials.exists() else [],
         )
 
-        # prune partials no future row can extend (future ts > wm and
-        # extension needs ts - p_last <= gap): otherwise an expired key
-        # whose partial survived advance_nfa re-registers a wm+1 timer
-        # forever — the timer storm / unbounded-state bug
-        _gap_us = self._pattern.gap_seconds * 1_000_000
-        _live = [j for j in range(len(p_state)) if wm_us - p_last[j] <= _gap_us]
-        if len(_live) != len(p_state):
-            p_state[:] = [p_state[j] for j in _live]
-            p_start[:] = [p_start[j] for j in _live]
-            p_last[:] = [p_last[j] for j in _live]
+    def store(self, st: Step) -> None:
+        buf, partials = st.state or ([], [])
+        put_rows(self._buf, buf)
+        put_rows(self._partials, partials)
+        sync_timer(self._handle, self._timer, st.timer_ms)
 
-        rem = ~release
-        self._buf.clear()
-        if rem.any():
-            self._buf.put(
-                [
-                    (int(a), int(b), int(c))
-                    for a, b, c in zip(ts[rem], mask[rem], ck[rem])
-                ]
-            )
-        self._partials.clear()
-        if p_state:
-            self._partials.put(
-                [
-                    (int(s), int(st), int(lt))
-                    for s, st, lt in zip(p_state, p_start, p_last)
-                ]
-            )
 
-        # ONE live timer per key: delete-then-register on horizon change
-        old = int(self._timer.get()[0]) if self._timer.exists() else None
-        if rem.any() or p_state:
-            horizon_us = max(
-                int(ts[rem].max()) if rem.any() else 0,
-                max(p_last) if p_last else 0,
-            )
-            t_ms = max(
-                horizon_us // 1000 + self._pattern.gap_seconds * 1000 + 1,
-                wm_us // 1000 + 1,
-            )
-            if old != t_ms:
-                if old is not None:
-                    self._handle.deleteTimer(old)
-                self._handle.registerTimer(t_ms)
-                self._timer.update((t_ms,))
-        else:
-            if old is not None:
-                self._handle.deleteTimer(old)
-            self._timer.clear()
-        return matches
+def _cep_decode(t) -> tuple:
+    buf_ts, buf_mask, buf_ck, p_state, p_start, p_last = t
+    return (
+        int_rows(zip(buf_ts, buf_mask, buf_ck)),
+        int_rows(zip(p_state, p_start, p_last)),
+    )
 
-    @staticmethod
-    def _emit(key, matches):
-        if matches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": key[0],
-                    "match_start_ts": [m[0] for m in matches],
-                    "match_end_ts": [m[1] for m in matches],
-                    "n_steps": [m[2] for m in matches],
-                }
-            )
 
-    def handleInputRows(self, key, rows, timerValues):
-        new: list[tuple[int, int, int]] = []
-        for pdf in rows:
-            if pdf.empty:
-                continue
-            ts = pdf["event_ts"].astype("datetime64[us]").astype("int64")
-            new.extend(
-                zip(
-                    ts.tolist(),
-                    pdf["mask"].astype("int64").tolist(),
-                    pdf["ck"].astype("int64").tolist(),
-                )
-            )
-        wm_us = max(timerValues.getCurrentWatermarkInMs(), 0) * 1000
-        yield from self._emit(key, self._advance(wm_us, new, force_all=False))
-
-    def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-        # timer ts >= buffered horizon + gap, so at expiry the watermark
-        # has passed every buffered row: full flush (apws timed_out twin)
-        wm_us = max(timerValues.getCurrentWatermarkInMs(), 0) * 1000
-        yield from self._emit(key, self._advance(wm_us, [], force_all=True))
-
-    def close(self) -> None:
-        pass
+def _cep_encode(state) -> tuple:
+    buf, partials = state
+    return (*columns_of(buf, 3), *columns_of(partials, 3))
 
 
 def cep_prestage(df: DataFrame, pattern) -> DataFrame:
-    """JVM-side pre-stage for CepPatternProcessor: per row, the NFA step
+    """JVM-side pre-stage for the CEP step: per row, the NFA step
     bitmask (bit i set iff tokens ∩ step_i ≠ ∅ — arrays_overlap against
     the step's literal id set) and the cross-engine release-order checksum.
     Token arrays die here; the stateful stage sees 3 small numerics."""
-    from parallel_dataflow_spark.streaming.cep import _ck_col, row_step_mask  # noqa: F401
-
     mask = F.lit(0)
     for i, step in enumerate(pattern.steps):
         step_arr = F.array(*[F.lit(int(t)) for t in sorted(step)])
@@ -313,6 +457,23 @@ def cep_prestage(df: DataFrame, pattern) -> DataFrame:
     )
 
 
+def cep_stream(
+    stream: DataFrame,
+    pattern,
+    watermark: str,
+    max_buffer_rows: int,
+    overflow_acc,
+    api: str,
+) -> DataFrame:
+    """Both CEP paths: pre-stage, watermark, then the keyed step under
+    ``api`` (state tuple = cep.STATE_SCHEMA on the APWS path)."""
+    src = cep_prestage(stream, pattern).withWatermark("event_ts", watermark)
+    proc = CepPatternProcessor(pattern, max_buffer_rows, overflow_acc)
+    return keyed_stream(
+        src, ["doc_id"], proc, api, STATE_SCHEMA, _cep_decode, _cep_encode
+    )
+
+
 def match_pattern_stream_tws(
     stream: DataFrame,
     pattern,
@@ -321,19 +482,9 @@ def match_pattern_stream_tws(
     overflow_acc=None,
 ) -> DataFrame:
     """transformWithStateInPandas CEP path (needs protobuf — tws_available;
-    the apws engine in streaming/cep.py is the in-sandbox fallback with
-    identical semantics via the shared advance_nfa kernel)."""
-    from parallel_dataflow_spark.streaming.cep import MATCH_SCHEMA
-
-    src = cep_prestage(stream, pattern).withWatermark("event_ts", watermark)
-    return src.groupBy("doc_id").transformWithStateInPandas(
-        statefulProcessor=CepPatternProcessor(
-            pattern, max_buffer_rows=max_buffer_rows, overflow_acc=overflow_acc
-        ),
-        outputStructType=MATCH_SCHEMA,
-        outputMode="append",
-        timeMode="eventTime",
-    )
+    cep.match_pattern_stream is the APWS path over the same step, which
+    runs without protobuf)."""
+    return cep_stream(stream, pattern, watermark, max_buffer_rows, overflow_acc, "tws")
 
 
 def running_doc_stats_batch(df: DataFrame) -> DataFrame:
@@ -350,48 +501,92 @@ def running_doc_stats_batch(df: DataFrame) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Third TWS processor: MapState + timer-driven purge (the remaining state
+# Token quota: MapState + timer-driven purge (the remaining state
 # primitive the ValueState accumulator and the ListState CEP buffer don't
 # touch). Per-source token-quota enforcement over event-time windows —
 # the streaming face of the graded curate_token_budget entry.
 # ---------------------------------------------------------------------------
 
-QUOTA_OUTPUT_SCHEMA = (
-    "source string, window_start bigint, admitted_tok bigint, "
-    "rejected_tok bigint, admitted_rows bigint, rejected_rows bigint"
+QUOTA_OUTPUT_SCHEMA = T.StructType(
+    [T.StructField("source", T.StringType())]
+    + [
+        T.StructField(c, T.LongType())
+        for c in (
+            "window_start",
+            "admitted_tok",
+            "rejected_tok",
+            "admitted_rows",
+            "rejected_rows",
+        )
+    ]
 )
 
 
-class TokenQuotaProcessor(StatefulProcessor):
-    """MapState + ListState quota enforcer, keyed by source.
+def quota_step(
+    budget: int, window_us: int, ttl_us: int, state, rows: list, wm_ms: int
+) -> Step:
+    """One source's quota step. ``state`` = (buffer rows (ts_us, n_tok,
+    ck), {window_start_us: [raw_tok, adm_tok, rej_tok, adm_rows,
+    rej_rows]}); ``rows`` = new (ts_us, n_tok, ck).
 
-    Semantics: sequences are admitted per event-time window while the
-    window's cumulative RAW token total stays within ``budget``, in
-    strict GLOBAL (event_ts, ck) order. To make that order independent
-    of micro-batch boundaries (events arrive out of event-time order),
-    rows are BUFFERED in a ListState until the watermark passes them —
-    the CEP buffer discipline — and only then folded through the
-    MapState window totals. Releases are monotone in the watermark, so
-    the fold order over all released rows equals the batch twin's
-    global sort for any batching (kill/resume differential caught the
-    eager-admission variant flipping boundary rows between batchings).
+    Sequences are admitted per event-time window while the window's
+    cumulative RAW token total stays within ``budget``, in strict GLOBAL
+    (event_ts, ck) order. To make that order independent of micro-batch
+    boundaries (events arrive out of event-time order), rows are
+    BUFFERED until the watermark passes them — the CEP buffer discipline
+    — and only then folded into the window totals. Releases are monotone
+    in the watermark, so the fold order over all released rows equals the
+    batch twin's global sort for any batching (kill/resume differential
+    caught the eager-admission variant flipping boundary rows between
+    batchings). Raw totals (not admitted-only) are the state because they
+    are a monotone counter: the admitted/rejected split at any prefix is
+    then a pure function of the released prefix.
 
-    Raw totals (not admitted-only) are the state because they are a
-    monotone counter: the admitted/rejected split at any prefix is then
-    a pure function of the released prefix, independent of replay
-    boundaries.
+    Emits one row per window TOUCHED by released rows, carrying its
+    RUNNING totals (latest emission per (source, window) is final — what
+    a keyed latest-wins upsert sink needs), taken BEFORE the purge: a
+    large watermark jump (e.g. a flush sentinel) can release rows into
+    windows that are already purge-eligible, and their final totals must
+    still be published. Windows whose end + ttl is behind the watermark
+    can never change and are purged; the timer sits at the earliest
+    actionable instant, min(buffered ts, purge horizon), never behind the
+    watermark. A dead source keeps no buffer, no windows and no timer."""
+    buf, spent = state or ([], {})
+    spent = {w: list(st) for w, st in spent.items()}
+    wm_us = wm_ms * 1000
+    buf = sorted([*buf, *rows], key=lambda r: (r[0], r[2]))
+    touched: set[int] = set()
+    for ts_us, n_tok, _ck in (r for r in buf if r[0] <= wm_us):
+        w = ts_us - ts_us % window_us
+        st = spent.setdefault(w, [0, 0, 0, 0, 0])
+        st[0] += n_tok
+        if st[0] <= budget:
+            st[1] += n_tok
+            st[3] += 1
+        else:
+            st[2] += n_tok
+            st[4] += 1
+        touched.add(w)
+    out = [(w, *spent[w][1:]) for w in sorted(touched)]
+    remain = [r for r in buf if r[0] > wm_us]
+    spent = {w: st for w, st in spent.items() if w + window_us + ttl_us > wm_us}
+    if not remain and not spent:
+        return Step(None, out)
+    horizons = [min(r[0] for r in remain) // 1000 + 1] if remain else []
+    if spent:
+        horizons.append((min(spent) + window_us + ttl_us) // 1000 + 1)
+    return Step((remain, spent), out, max(min(horizons), wm_ms + 1))
 
-    State hygiene: windows whose end + ttl falls behind the watermark
-    can never change — purged opportunistically and via ONE
-    delete-then-register event-time timer that also drains the buffer
-    for keys that stop receiving input (timer at the earliest
-    actionable instant: min(buffered ts, purge horizon)). A dead
-    source retains no buffer, no map entries, and no timer.
 
-    Emits per batch one row per window TOUCHED by newly released rows,
-    carrying the window's RUNNING totals — latest emission per
-    (source, window) is final, which is what a keyed latest-wins
-    upsert sink needs."""
+class TokenQuotaProcessor(StepProcessor):
+    """TWS adapter of quota_step, keyed by source: ListState
+    'quota_buffer' holds the sub-watermark rows, MapState 'window_spent'
+    the per-window totals, and one event-time timer (recorded in
+    'quota_timer') drains the buffer and purges closed windows for
+    sources that stop receiving input."""
+
+    COLUMNS = ("event_ts", "n_tok", "ck")
+    SCHEMA = QUOTA_OUTPUT_SCHEMA
 
     def __init__(self, budget: int, window_sec: int = 3600, ttl_sec: int = 3600):
         self._budget = int(budget)
@@ -411,111 +606,27 @@ class TokenQuotaProcessor(StatefulProcessor):
         )
         self._timer = handle.getValueState("quota_timer", "t bigint")
 
-    def _advance(self, wm_us: int, new_rows: list):
-        buf = [tuple(int(x) for x in r)
-               for r in (self._buf.get() if self._buf.exists() else [])]
-        buf.extend(new_rows)
-        buf.sort(key=lambda r: (r[0], r[2]))
-        release = [r for r in buf if r[0] <= wm_us]
-        remain = [r for r in buf if r[0] > wm_us]
-
-        touched: dict[int, list[int]] = {}
-        for ts_us, n_tok, _ck in release:
-            w = ts_us - ts_us % self._window_us
-            if w in touched:
-                st = touched[w]
-            elif self._spent.exists() and self._spent.containsKey((w,)):
-                st = [int(v) for v in self._spent.getValue((w,))]
-                touched[w] = st
-            else:
-                st = touched.setdefault(w, [0, 0, 0, 0, 0])
-            st[0] += n_tok
-            if st[0] <= self._budget:
-                st[1] += n_tok
-                st[3] += 1
-            else:
-                st[2] += n_tok
-                st[4] += 1
-        for w, st in touched.items():
-            self._spent.updateValue((w,), tuple(st))
-
-        self._buf.clear()
-        if remain:
-            self._buf.put([tuple(r) for r in remain])
-
-        # purge closed windows, then (re-)register ONE timer at the
-        # earliest instant future work becomes actionable
-        if self._spent.exists():
-            dead = [
-                int(k[0])
-                for k in self._spent.keys()
-                if int(k[0]) + self._window_us + self._ttl_us <= wm_us
-            ]
-            for k in dead:
-                self._spent.removeKey((k,))
-        live = (
-            [int(k[0]) for k in self._spent.keys()]
-            if self._spent.exists()
-            else []
+    def step(self, key, state, rows, wm_ms, fired):
+        return quota_step(
+            self._budget, self._window_us, self._ttl_us, state, rows, wm_ms
         )
-        old = int(self._timer.get()[0]) if self._timer.exists() else None
-        horizons = []
-        if remain:
-            horizons.append(min(r[0] for r in remain) // 1000 + 1)
-        if live:
-            horizons.append(
-                (min(live) + self._window_us + self._ttl_us) // 1000 + 1
-            )
-        if horizons:
-            t_ms = max(min(horizons), wm_us // 1000 + 1)
-            if old != t_ms:
-                if old is not None:
-                    self._handle.deleteTimer(old)
-                self._handle.registerTimer(t_ms)
-                self._timer.update((t_ms,))
-        else:
-            if old is not None:
-                self._handle.deleteTimer(old)
-            self._timer.clear()
-        return touched
 
-    @staticmethod
-    def _emit(key, touched):
-        if touched:
-            ws = sorted(touched)
-            yield pd.DataFrame(
-                {
-                    "source": key[0],
-                    "window_start": ws,
-                    "admitted_tok": [touched[w][1] for w in ws],
-                    "rejected_tok": [touched[w][2] for w in ws],
-                    "admitted_rows": [touched[w][3] for w in ws],
-                    "rejected_rows": [touched[w][4] for w in ws],
-                }
-            )
+    def load(self):
+        buf = int_rows(self._buf.get()) if self._buf.exists() else []
+        spent = (
+            {int(k[0]): [int(x) for x in v] for k, v in self._spent.iterator()}
+            if self._spent.exists()
+            else {}
+        )
+        return buf, spent
 
-    def handleInputRows(self, key, rows, timerValues):
-        new: list[tuple[int, int, int]] = []
-        for pdf in rows:
-            if pdf.empty:
-                continue
-            ts = pdf["event_ts"].astype("datetime64[us]").astype("int64")
-            new.extend(
-                zip(
-                    ts.tolist(),
-                    pdf["n_tok"].astype("int64").tolist(),
-                    pdf["ck"].astype("int64").tolist(),
-                )
-            )
-        wm_us = max(timerValues.getCurrentWatermarkInMs(), 0) * 1000
-        yield from self._emit(key, self._advance(wm_us, new))
-
-    def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-        wm_us = max(timerValues.getCurrentWatermarkInMs(), 0) * 1000
-        yield from self._emit(key, self._advance(wm_us, []))
-
-    def close(self) -> None:
-        pass
+    def store(self, st: Step) -> None:
+        buf, spent = st.state or ([], {})
+        put_rows(self._buf, buf)
+        self._spent.clear()
+        for w, totals in spent.items():
+            self._spent.updateValue((w,), tuple(totals))
+        sync_timer(self._handle, self._timer, st.timer_ms)
 
 
 def quota_prestage(df: DataFrame) -> DataFrame:
@@ -550,15 +661,10 @@ def token_quota_stream_tws(
     watermark: str = "10 minutes",
 ) -> DataFrame:
     """transformWithStateInPandas quota path (needs protobuf —
-    tws_available; TokenQuotaProcessor carries the semantics and is
-    differential-tested against token_quota_batch on the handle
-    double)."""
-    src = quota_prestage(stream).withWatermark("event_ts", watermark)
-    return src.groupBy("source").transformWithStateInPandas(
-        statefulProcessor=TokenQuotaProcessor(budget, window_sec, ttl_sec),
-        outputStructType=QUOTA_OUTPUT_SCHEMA,
-        outputMode="append",
-        timeMode="eventTime",
+    tws_available; TokenQuotaProcessor is differential-tested against
+    token_quota_batch on the handle double)."""
+    return token_quota_stream(
+        stream, budget, window_sec, ttl_sec, watermark, api="tws"
     )
 
 
@@ -608,6 +714,20 @@ _QUOTA_STATE_SCHEMA = (
 )
 
 
+def _quota_decode(t) -> tuple:
+    b_ts, b_tok, b_ck, *windows = t
+    return (
+        int_rows(zip(b_ts, b_tok, b_ck)),
+        {r[0]: list(r[1:]) for r in int_rows(zip(*windows))},
+    )
+
+
+def _quota_encode(state) -> tuple:
+    buf, spent = state
+    ws = sorted(spent)
+    return (*columns_of(buf, 3), ws, *columns_of([spent[w] for w in ws], 5))
+
+
 def token_quota_stream(
     stream: DataFrame,
     budget: int,
@@ -618,114 +738,14 @@ def token_quota_stream(
 ) -> DataFrame:
     """Quota enforcement with API fallback, mirroring
     running_doc_stats_stream: 'tws' = transformWithStateInPandas
-    (TokenQuotaProcessor), 'apws' = applyInPandasWithState with the SAME
-    buffered-release semantics (buffer + MapState become parallel arrays
-    in the single apws state tuple; EventTimeTimeout replaces the
-    registered timer). Emissions carry RUNNING per-window totals —
-    latest emission per (source, window) = final, upsert-sink-safe."""
-    if api == "auto":
-        api = "tws" if tws_available() else "apws"
-    if api == "tws":
-        return token_quota_stream_tws(
-            stream, budget, window_sec, ttl_sec, watermark
-        )
-
-    window_us = int(window_sec) * 1_000_000
-    ttl_us = int(ttl_sec) * 1_000_000
-    budget = int(budget)
-
-    def kernel(key, pdf_iter, state):
-        import pandas as pd  # worker-side
-
-        buf: list[tuple[int, int, int]] = []
-        spent: dict[int, list[int]] = {}
-        if state.exists:
-            b_ts, b_tok, b_ck, wins, raws, adm_t, rej_t, adm_r, rej_r = state.get
-            buf = [
-                (int(a), int(b), int(c)) for a, b, c in zip(b_ts, b_tok, b_ck)
-            ]
-            spent = {
-                int(w): [int(a), int(b), int(c), int(d), int(e)]
-                for w, a, b, c, d, e in zip(wins, raws, adm_t, rej_t, adm_r, rej_r)
-            }
-        for pdf in pdf_iter:
-            if pdf.empty:
-                continue
-            ts = pdf["event_ts"].astype("datetime64[us]").astype("int64")
-            buf.extend(
-                zip(
-                    ts.tolist(),
-                    pdf["n_tok"].astype("int64").tolist(),
-                    pdf["ck"].astype("int64").tolist(),
-                )
-            )
-        wm_us = max(state.getCurrentWatermarkMs(), 0) * 1000
-        buf.sort(key=lambda r: (r[0], r[2]))
-        release = [r for r in buf if r[0] <= wm_us]
-        remain = [r for r in buf if r[0] > wm_us]
-
-        touched: set[int] = set()
-        for ts_us, n_tok, _ck in release:
-            w = ts_us - ts_us % window_us
-            st = spent.setdefault(w, [0, 0, 0, 0, 0])
-            st[0] += n_tok
-            if st[0] <= budget:
-                st[1] += n_tok
-                st[3] += 1
-            else:
-                st[2] += n_tok
-                st[4] += 1
-            touched.add(w)
-
-        # emit from PRE-purge values: a large watermark jump (e.g. a
-        # flush sentinel) can release rows into windows that are already
-        # purge-eligible — their final totals must still be published
-        emitted = {w: list(spent[w]) for w in touched}
-        spent = {
-            w: st for w, st in spent.items() if w + window_us + ttl_us > wm_us
-        }
-        if remain or spent:
-            ws = sorted(spent)
-            state.update(
-                (
-                    [r[0] for r in remain],
-                    [r[1] for r in remain],
-                    [r[2] for r in remain],
-                    ws,
-                    [spent[w][0] for w in ws],
-                    [spent[w][1] for w in ws],
-                    [spent[w][2] for w in ws],
-                    [spent[w][3] for w in ws],
-                    [spent[w][4] for w in ws],
-                )
-            )
-            horizons = []
-            if remain:
-                horizons.append(min(r[0] for r in remain) // 1000 + 1)
-            if ws:
-                horizons.append((min(ws) + window_us + ttl_us) // 1000 + 1)
-            state.setTimeoutTimestamp(max(min(horizons), wm_us // 1000 + 1))
-        else:
-            state.remove()
-
-        if emitted:
-            ws_e = sorted(emitted)
-            yield pd.DataFrame(
-                {
-                    "source": key[0],
-                    "window_start": ws_e,
-                    "admitted_tok": [emitted[w][1] for w in ws_e],
-                    "rejected_tok": [emitted[w][2] for w in ws_e],
-                    "admitted_rows": [emitted[w][3] for w in ws_e],
-                    "rejected_rows": [emitted[w][4] for w in ws_e],
-                }
-            )
-
+    (TokenQuotaProcessor), 'apws' = applyInPandasWithState over the SAME
+    quota_step (buffer + window totals become parallel arrays in the
+    single apws state tuple; EventTimeTimeout replaces the registered
+    timer). Emissions carry RUNNING per-window totals — latest emission
+    per (source, window) = final, upsert-sink-safe."""
+    api = resolve_api(api)
     src = quota_prestage(stream).withWatermark("event_ts", watermark)
-    return src.groupBy("source").applyInPandasWithState(
-        kernel,
-        outputStructType=QUOTA_OUTPUT_SCHEMA,
-        stateStructType=_QUOTA_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf="EventTimeTimeout",
+    proc = TokenQuotaProcessor(budget, window_sec, ttl_sec)
+    return keyed_stream(
+        src, ["source"], proc, api, _QUOTA_STATE_SCHEMA, _quota_decode, _quota_encode
     )

@@ -862,3 +862,192 @@ def test_quota_apws_stream_matches_batch_twin(spark, tmp_path):
     }
     assert got == want
     assert any(v[1] > 0 for v in want.values())  # the cap actually bound
+
+
+def _run_fake_event_time(make_proc, arrivals, batch_size, lag_us, flush_wm_ms):
+    """Contract-faithful mini TWS runtime for an event-time processor.
+    ``arrivals``: (key, ts_us, row dict) in arrival order, event_ts in
+    the row as epoch micros. Per micro-batch: handleInputRows per key at
+    the watermark (max ts of the EARLIER batches minus ``lag_us``), then
+    every timer at or behind it fires (removed first, as the runtime
+    does); at the end a far watermark fires what is left."""
+    from pyspark.sql.streaming.stateful_processor import (
+        ExpiredTimerInfo,
+        TimerValues,
+    )
+
+    handles: dict[tuple, FakeHandle] = {}
+    procs: dict[tuple, object] = {}
+    emitted: list[dict] = []
+
+    def proc_for(key):
+        if key not in procs:
+            handles[key] = FakeHandle()
+            procs[key] = make_proc()
+            procs[key].init(handles[key])
+        return procs[key]
+
+    def take(frames):
+        for f in frames:
+            emitted.extend(f.to_dict("records"))
+
+    def fire(wm_ms):
+        for key, h in handles.items():
+            for t in list(h.listTimers()):
+                if t <= wm_ms:
+                    h.deleteTimer(t)
+                    take(
+                        procs[key].handleExpiredTimer(
+                            key, TimerValues(-1, wm_ms), ExpiredTimerInfo(t)
+                        )
+                    )
+
+    max_ts = 0
+    for lo in range(0, len(arrivals), batch_size):
+        batch = arrivals[lo : lo + batch_size]
+        wm_ms = max(max_ts - lag_us, 0) // 1000
+        by_key: dict[tuple, list] = {}
+        for key, ts, row in batch:
+            by_key.setdefault(key, []).append(row)
+            max_ts = max(max_ts, ts)
+        for key, rs in by_key.items():
+            pdf = pd.DataFrame(rs)
+            if "event_ts" in pdf:
+                pdf["event_ts"] = np.array(
+                    pdf["event_ts"].tolist(), dtype="datetime64[us]"
+                )
+            tv = TimerValues(-1, wm_ms)
+            take(proc_for(key).handleInputRows(key, iter([pdf]), tv))
+        fire(wm_ms)
+    fire(flush_wm_ms)
+    for p in procs.values():
+        p.close()
+    return emitted, handles
+
+
+def _token_seq_df(spark, n=160, seed=23, vocab=5000, min_tok=8, max_tok=32):
+    """Sequences for 12 docs over 2 sources, one every 11 s (~3 windows
+    of 600 s); a large vocab saturates the K=256 KMV sketches."""
+    from parallel_dataflow_spark.sources.sequences import SEQUENCE_SCHEMA
+
+    rng = np.random.default_rng(seed)
+    base = np.datetime64("2026-01-01T00:00:00", "us")
+    pdf = pd.DataFrame(
+        {
+            "doc_id": [f"doc-{int(rng.integers(0, 12))}" for _ in range(n)],
+            "tokens": [
+                rng.integers(0, vocab, int(rng.integers(min_tok, max_tok))).tolist()
+                for _ in range(n)
+            ],
+            "n_tok": 0,
+            "source": [f"src{int(rng.integers(0, 2))}" for _ in range(n)],
+            "event_ts": [base + np.timedelta64(11 * i, "s") for i in range(n)],
+        }
+    )
+    pdf["n_tok"] = pdf["tokens"].map(len)
+    return spark.createDataFrame(pdf, schema=SEQUENCE_SCHEMA)
+
+
+def _with_ts_us(df):
+    return df.withColumn(
+        "ts_us", F.col("event_ts").cast("timestamp_ltz").cast("long") * 1_000_000
+    )
+
+
+def _shuffle_blocks(rows, block, seed):
+    """Arrival order != event-time order: permute within blocks whose
+    time span stays inside the watermark lag, so no row is late."""
+    rng = np.random.default_rng(seed)
+    out = []
+    for lo in range(0, len(rows), block):
+        chunk = rows[lo : lo + block]
+        out.extend(chunk[i] for i in rng.permutation(len(chunk)))
+    return out
+
+
+def test_tws_kmv_processor_matches_batch_twin(spark):
+    """KmvProcessor (ValueState sketch + purge timer) through the handle
+    double: the latest emission per (source, window) == kmv_window_batch
+    under two micro-batch splits, and every key ends with no sketch and
+    no timer once the watermark passes window end + ttl."""
+    from parallel_dataflow_spark.operators.sketches import KMV_K
+    from parallel_dataflow_spark.streaming.kmvstream import (
+        KmvProcessor,
+        kmv_prestage,
+        kmv_window_batch,
+    )
+
+    df = _token_seq_df(spark)
+    staged = sorted(
+        (r["ts_us"], r["h"], r["source"], r["window_start"])
+        for r in _with_ts_us(kmv_prestage(df, 600)).collect()
+    )
+    arrivals = _shuffle_blocks(
+        [((src, ws), ts, {"h": h}) for ts, h, src, ws in staged], 40, seed=3
+    )
+    want = {
+        (r["source"], int(r["window_start"])): (list(r["hs"]), int(r["sketch_size"]))
+        for r in kmv_window_batch(df, 600).collect()
+    }
+    assert any(size == KMV_K for _, size in want.values()), "no sketch saturated"
+    flush_ms = staged[-1][0] // 1000 + 10 * 1200 * 1000
+
+    for batch_size in (97, 389):
+        emitted, handles = _run_fake_event_time(
+            lambda: KmvProcessor(600, 600), arrivals, batch_size, 120 * US, flush_ms
+        )
+        got = {}
+        for e in emitted:
+            got[(e["source"], int(e["window_start"]))] = (
+                [int(x) for x in e["hs"]],
+                int(e["sketch_size"]),
+            )
+        assert got == want, batch_size
+        for key, h in handles.items():
+            assert not h.states["kmv_hs"].exists(), key
+            assert not h.timers, key
+
+
+def test_tws_spandedup_processor_matches_batch_twin(spark):
+    """SpanDedupProcessor (ListState buffer + ValueState owner + one
+    timer) through the handle double: the latest emission per span hash
+    == span_dedup_batch under two micro-batch splits of shuffled arrivals,
+    and every key ends with no buffer, no owner and no timer."""
+    from parallel_dataflow_spark.streaming.spandedup import (
+        SpanDedupProcessor,
+        span_dedup_batch,
+        span_prestage,
+    )
+
+    df = _token_seq_df(spark, n=120, seed=29, vocab=3, min_tok=4, max_tok=13)
+    staged = sorted(
+        (r["ts_us"], r["ck"], r["doc_id"], r["span_idx"], r["h"])
+        for r in _with_ts_us(span_prestage(df, 4)).collect()
+    )
+    arrivals = _shuffle_blocks(
+        [
+            ((h,), ts, {"event_ts": ts, "ck": ck, "doc_id": doc, "span_idx": idx})
+            for ts, ck, doc, idx, h in staged
+        ],
+        16,
+        seed=5,
+    )
+    want = {
+        int(r["h"]): (r["owner_doc"], int(r["owner_idx"]), int(r["dup_rows"]))
+        for r in span_dedup_batch(df, 4).collect()
+    }
+    assert any(v[2] > 0 for v in want.values()), "fixture has no duplicate spans"
+    flush_ms = staged[-1][0] // 1000 + 3 * 3600 * 1000
+
+    for batch_size in (23, 150):
+        emitted, handles = _run_fake_event_time(
+            lambda: SpanDedupProcessor(3600), arrivals, batch_size, 120 * US, flush_ms
+        )
+        got = {}
+        for e in emitted:
+            got[int(e["h"])] = (e["owner_doc"], int(e["owner_idx"]), int(e["dup_rows"]))
+        assert got == want, batch_size
+        for key, h in handles.items():
+            assert not h.states["span_buffer"].exists(), key
+            assert not h.states["span_owner"].exists(), key
+            assert not h.timers, key

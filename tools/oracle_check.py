@@ -81,8 +81,19 @@ def main():
 
         qs, oracles = EXTRA_QUERIES, EXTRA_ORACLE_SQL
     else:
+        # build only the oracles of the queries that run: a lazy one may
+        # need inputs (the Bril corpus) that a subset run does not
+        from parallel_dataflow_spark.plans.registry import (
+            LAZY_ORACLE_SQL,
+            ORACLE_SQL,
+        )
+
         qs = drv.queries()
-        oracles = drv.oracle_sql()
+        oracles = {
+            n: ORACLE_SQL[n] if n in ORACLE_SQL else LAZY_ORACLE_SQL[n]()
+            for n in only or qs
+            if n in ORACLE_SQL or n in LAZY_ORACLE_SQL
+        }
 
     spark = get_spark("oracle_check")
     con = duckdb.connect()
